@@ -20,10 +20,10 @@ import graft.functions.BloomAgg
   * same bounded one-row-per-file granularity Iceberg/Delta manifests are.
   * A 1 M-key 1 % bloom is ~1.2 MB; 100 k files ≈ 120 GB of blooms — so the
   * probe runs DISTRIBUTED by default ([[selectFilesDistributed]]: the
-  * manifest filters where it lies, only surviving file names reach the
-  * driver) and the write shards the manifest across reduce tasks (no
-  * single-writer funnel); the write is one scan + one shuffle of
-  * (file, bloom) partials.
+  * manifest is probed where it lies, and only (file name, verdict) pairs
+  * reach the driver — never a bloom) and the write shards the manifest
+  * across reduce tasks (no single-writer funnel); the write is one scan +
+  * one shuffle of (file, bloom) partials.
   *
   * Soundness: blooms have no false negatives, so pruning never loses a row;
   * the residual equality filter in [[lookup]] removes false-positive FILES'
@@ -76,17 +76,18 @@ object BloomIndex {
     (kept, rows.length.toLong)
   }
 
-  /** Distributed twin of [[selectFiles]]: the manifest is FILTERED where it
+  /** Distributed twin of [[selectFiles]]: the manifest is PROBED where it
     * lies — each executor task deserializes and probes its own manifest
     * rows' blooms ([[graft.functions.BloomMightContainAny]], same hashing
-    * and same per-file short-circuit as the driver loop) — and only the
-    * surviving file NAMES are collected. The driver never holds a bloom:
-    * at the 100 k-file design point the driver form would collect ~120 GB
-    * of filter payloads (guide §5: the driver should do almost no data
-    * work); this form collects kilobytes of paths plus one boolean per file
-    * — which is also why the verdict is PROJECTED rather than filtered: one
-    * job yields both the kept set and the total file count (a filter +
-    * separate `manifest.count()` would scan the manifest twice per lookup).
+    * and same per-file short-circuit as the driver loop) — and every
+    * (file name, verdict) pair is collected, survivors and misses alike.
+    * The driver never holds a bloom: at the 100 k-file design point the
+    * driver form would collect ~120 GB of filter payloads (guide §5: the
+    * driver should do almost no data work); this form collects one path
+    * plus one boolean per file. The verdict is PROJECTED rather than
+    * filtered so one job yields both the kept set and the total file count
+    * (a filter + separate `manifest.count()` would scan the manifest twice
+    * per lookup).
     * Same kept set as [[selectFiles]] by construction (BloomIndexSpec pins
     * the parity law). */
   def selectFilesDistributed(spark: SparkSession, dir: String, column: String,

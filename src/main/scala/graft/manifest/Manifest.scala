@@ -28,6 +28,8 @@ import org.apache.spark.sql.functions._
   * finer-grained recovery where partial sink output must be reconciled.
   */
 final class Manifest(root: String) {
+  import Manifest.Json
+
   private val manifestDir = Paths.get(root, "_manifest")
   private val snapshotDir = Paths.get(root, "_snapshots")
   private val tmpDir = Paths.get(root, "_tmp")
@@ -99,23 +101,27 @@ final class Manifest(root: String) {
 
   private def commitEntry(sink: String, runId: String, rows: Long, bytes: Long,
       convs: Long): Unit = {
-    val snap = appendSnapshot(sid => snapshotRecord(sid, sink, runId, rows, bytes, convs))
-    val entry =
-      s"""{"run_id":"$runId","sink":"$sink","row_count":$rows,""" +
-        s""""bytes":$bytes,"convs":$convs,"snapshot_id":$snap,""" +
-        s""""committed_ts":"${java.time.Instant.now()}"}"""
+    val snap = appendSnapshot(sid =>
+      snapshotRecord(sid, sink, runId, "commit", rows, bytes, convs))
+    val entry = Json.createObjectNode()
+      .put("run_id", runId).put("sink", sink).put("row_count", rows)
+      .put("bytes", bytes).put("convs", convs).put("snapshot_id", snap)
+      .put("committed_ts", java.time.Instant.now().toString)
     val tmp = tmpDir.resolve(s"$sink.json")
-    Files.writeString(tmp, entry)
+    Files.writeString(tmp, Json.writeValueAsString(entry))
     Files.move(tmp, manifestDir.resolve(s"$sink.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def snapshotRecord(snapshotId: Long, sink: String, runId: String,
+  /** One snapshot-log record; `op` is "commit" (batch run) or
+    * "stream_commit" (micro-batch). */
+  private def snapshotRecord(snapshotId: Long, sink: String, runId: String, op: String,
       rows: Long, bytes: Long, convs: Long): String =
-    s"""{"snapshot_id":$snapshotId,"parent_id":${snapshotId - 1},""" +
-      s""""run_id":"$runId","sink":"$sink","op":"commit","row_count":$rows,""" +
-      s""""bytes":$bytes,"convs":$convs,""" +
-      s""""committed_ts":"${java.time.Instant.now()}"}"""
+    Json.writeValueAsString(Json.createObjectNode()
+      .put("snapshot_id", snapshotId).put("parent_id", snapshotId - 1)
+      .put("run_id", runId).put("sink", sink).put("op", op).put("row_count", rows)
+      .put("bytes", bytes).put("convs", convs)
+      .put("committed_ts", java.time.Instant.now().toString))
 
   /** Append-only, snapshot-numbered commit log — the Iceberg-shaped half of
     * the manifest. Each commit claims snapshot N+1 by ATOMICALLY hard-linking
@@ -221,8 +227,7 @@ final class Manifest(root: String) {
     * path-based snapshot readers and [[snapshots]]). */
   def retention(): Retention = {
     if (!Files.exists(retentionPath)) return Retention.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = om.readTree(Files.readString(retentionPath))
+    val n = Json.readTree(Files.readString(retentionPath))
     import scala.jdk.CollectionConverters._
     val bases = Option(n.get("bases")).map { b =>
       b.properties().asScala.map { e =>
@@ -260,7 +265,6 @@ final class Manifest(root: String) {
   def expireSnapshots(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"keepLast out of range: $keepLast")
     if (!Files.isDirectory(snapshotDir)) return Seq.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     // (id, sink, op, batchId) per parseable record — mid-write records are
     // skipped like every other log reader here
     val records = graft.util.Fs.listDir(snapshotDir)
@@ -270,7 +274,7 @@ final class Manifest(root: String) {
       }
       .flatMap { p =>
         try {
-          val n = om.readTree(Files.readString(p))
+          val n = Json.readTree(Files.readString(p))
           val batch =
             if (n.hasNonNull("op") && n.get("op").asText == "stream_commit")
               Some(n.get("run_id").asText.stripPrefix("stream-batch-").toLong)
@@ -304,13 +308,14 @@ final class Manifest(root: String) {
       case (acc, _) => acc
     }
     // durable state FIRST (atomic replace), record deletes after
-    val body = s"""{"horizon":$horizon,"bases":{""" +
-      bases.toSeq.sortBy(_._1).map { case (s, b) =>
-        s""""$s":{"max_batch":${b.maxBatch},"n_batches":${b.nBatches}}"""
-      }.mkString(",") + "}}"
+    val body = Json.createObjectNode().put("horizon", horizon)
+    val basesNode = body.putObject("bases")
+    bases.toSeq.sortBy(_._1).foreach { case (s, b) =>
+      basesNode.putObject(s).put("max_batch", b.maxBatch).put("n_batches", b.nBatches)
+    }
     Files.createDirectories(tmpDir)
     val tmp = tmpDir.resolve(s"_retention-${java.util.UUID.randomUUID()}.json")
-    Files.writeString(tmp, body)
+    Files.writeString(tmp, Json.writeValueAsString(body))
     Files.move(tmp, retentionPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     expire.foreach { case (_, _, _, p) => Files.deleteIfExists(p) }
@@ -402,7 +407,8 @@ final class Manifest(root: String) {
         // identical content, so the staged stats equal the promoted dir's
         if (promoted || !alreadyLogged(sink)) {
           val (rows, bytes, convs) = stagedStats(sink)
-          appendSnapshot(sid => streamSnapshotRecord(sid, sink, batchId, rows, bytes, convs))
+          appendSnapshot(sid => snapshotRecord(sid, sink, s"stream-batch-$batchId",
+            "stream_commit", rows, bytes, convs))
           appended += 1
         }
       }
@@ -421,26 +427,18 @@ final class Manifest(root: String) {
     * recovery read; tolerant of mid-write records like every log reader. */
   private def streamAuditedSinks(batchId: Long): Set[String] = {
     if (!Files.isDirectory(snapshotDir)) return Set.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val runId = s"stream-batch-$batchId"
     graft.util.Fs.listDir(snapshotDir)
       .filter(_.getFileName.toString.startsWith("snap-"))
       .flatMap { p =>
         try {
-          val n = om.readTree(Files.readString(p))
+          val n = Json.readTree(Files.readString(p))
           if (n.hasNonNull("run_id") && n.get("run_id").asText == runId &&
             n.hasNonNull("sink")) Some(n.get("sink").asText)
           else None
         } catch { case scala.util.control.NonFatal(_) => None }
       }.toSet
   }
-
-  private def streamSnapshotRecord(snapshotId: Long, sink: String, batchId: Long,
-      rows: Long, bytes: Long, convs: Long): String =
-    s"""{"snapshot_id":$snapshotId,"parent_id":${snapshotId - 1},""" +
-      s""""run_id":"stream-batch-$batchId","sink":"$sink","op":"stream_commit",""" +
-      s""""row_count":$rows,"bytes":$bytes,"convs":$convs,""" +
-      s""""committed_ts":"${java.time.Instant.now()}"}"""
 
   /** Snapshot-isolation (time-travel) read over a STREAMING sink: only the
     * batch directories whose stream-commit audit record has
@@ -467,12 +465,11 @@ final class Manifest(root: String) {
           "the read cannot be served without risking partial data; size keepLast " +
           "above every reader's pin age")
     if (!Files.isDirectory(snapshotDir)) return spark.emptyDataFrame
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val liveIds = graft.util.Fs.listDir(snapshotDir)
       .filter(_.getFileName.toString.startsWith("snap-"))
       .flatMap { p =>
         try {
-          val n = om.readTree(Files.readString(p))
+          val n = Json.readTree(Files.readString(p))
           if (n.hasNonNull("op") && n.get("op").asText == "stream_commit" &&
             n.hasNonNull("sink") && n.get("sink").asText == sink &&
             n.get("snapshot_id").asLong <= snapshotId)
@@ -552,6 +549,11 @@ final class Manifest(root: String) {
 }
 
 object Manifest {
+  /** The one JSON codec for every record the manifest and the run write
+    * (thread-safe once configured; never reconfigured). */
+  val Json: com.fasterxml.jackson.databind.ObjectMapper =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Durable retention state ([[Manifest.expireSnapshots]]). `horizon` is
     * the lowest snapshot id still servable by pinned readers (0 = nothing
     * expired); `bases` compacts the expired stream-commit records per sink —

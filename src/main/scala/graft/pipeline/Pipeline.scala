@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Transcripts
@@ -23,13 +24,12 @@ import graft.manifest.Manifest
   * Scale design:
   *  - single scan of the fact table feeds every sink (array+explode router,
   *    not per-sink scans);
-  *  - the only shuffles are the per-sink/per-conv aggregates and the
-  *    rate-limit verdict aggregation (all map-side-combined, output rows ≪
-  *    input rows); verdict joins back are broadcasts;
-  *  - the routed stream is salted-repartitioned before the per-sink writes so
-  *    one hot conversation cannot pin a single output task (reference analog:
-  *    one slow target blocking its channel, broker/connector.go:315-318 —
-  *    unhandled there, handled here per north_rule);
+  *  - the job's one full shuffle is the limiter's (sink, bucket, salt)
+  *    exchange ([[SinglePassLimit.staged]]): it spreads hot buckets over
+  *    `saltBuckets` tasks (reference analog: one slow target blocking its
+  *    channel, broker/connector.go:315-318 — unhandled there, handled here
+  *    per north_rule), clusters the per-sink write, and is read once;
+  *  - verdicts are O(cells) driver-side state, never rows;
   *  - AQE enabled in session conf handles residual skew at runtime.
   */
 object Pipeline {
@@ -40,7 +40,9 @@ object Pipeline {
       saltBuckets: Int = 32
   )
 
-  /** Parse, then salted-repartition on (conv_id, hash(turn_idx) % salt).
+  /** Parse, then salted-repartition on (conv_id, hash(turn_idx) % salt) —
+    * the front half of the driver queries, which consume parse fields in
+    * many downstream operators.
     *
     * The repartition serves three purposes at once:
     *  1. skew: a hot conversation spreads over `saltBuckets` tasks
@@ -52,7 +54,7 @@ object Pipeline {
     *     more cores);
     *  3. reuse: the rate-limit verdict aggregates and the main routed stream
     *     consume the SAME exchange (ReusedExchange), so the scan+parse runs
-    *     exactly once per job.
+    *     exactly once per query.
     */
   def parsedSalted(turns: DataFrame, saltBuckets: Int = 32): DataFrame =
     GrokParser.parse(turns)
@@ -74,30 +76,48 @@ object Pipeline {
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts"), col("level"))
 
-  /** parse → salt-repartition → enrich → route → limit;
-    * returns (routedFinal, dropped). */
-  def route(turns: DataFrame, spark: SparkSession, cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val parsed = parsedSalted(turns, cfg.saltBuckets)
-    val enriched = Enrichment.enrich(parsed, spark)
-    val fanned = Router.fanOut(enriched, cfg.routeRules)
-    // Verdict statistics reuse the SAME salted plan as the write path.
-    // (Measured alternative: an unsalted stats plan avoids the exchange
-    // round trip but loses the exchange's expression barrier, so the grok
-    // work re-inflates — 3x slower end to end. The exchange pays for itself.)
-    RateLimit.apply(fanned, cfg.limitRules)
+  /** parse → enrich → route → fan-out, narrowed to the sink contract
+    * columns: the limiter's input. Per-STAGE observe() counters (reference
+    * /api/sources + /api/workers parity, web/api/sources.go:30-89,
+    * workers.go:27-84) ride the one pass; after the limiter's first job they
+    * are in this frame's `queryExecution.observedMetrics` under
+    * `graft_scan`, `graft_parse` and `graft_route`. Conservation invariants
+    * (asserted in ManifestSpec): scan rows = parse ok + quarantined;
+    * route rows_in = scan rows; dead-letter routed rows = quarantined +
+    * unmatched. */
+  def limiterInput(turns: DataFrame, spark: SparkSession, cfg: Config): DataFrame = {
+    val parsed = parsedProjected(turns.observe("graft_scan", count(lit(1)).as("rows")))
+      .observe("graft_parse",
+        count(when(col("level").isNotNull, 1)).as("rows_ok"),
+        count(when(col("level").isNull, 1)).as("rows_quarantined"))
+    val targeted = Router.withTargets(Enrichment.enrich(parsed, spark), cfg.routeRules)
+      .observe("graft_route",
+        count(lit(1)).as("rows_in"),
+        count(when(col("targets") === array(lit(Router.DeadLetter)), 1)).as("rows_dead_letter"))
+    SinglePassLimit.contract(Router.explodeTargets(targeted))
+  }
+
+  /** Pipeline.run's staging pass: [[limiterInput]] → the limiter's one
+    * exchange → `staging`, written partitioned by sink. Returns the
+    * post-chain verdict cells and the per-stage counters. */
+  def stage(turns: DataFrame, spark: SparkSession, cfg: Config, staging: String)
+      : (Array[RateLimit.Cell], Map[String, Row]) = {
+    val input = limiterInput(turns, spark, cfg)
+    val (limited, cells) =
+      SinglePassLimit.limitReusingShuffle(input, cfg.limitRules, cfg.saltBuckets)
+    limited.write.mode("overwrite").partitionBy("sink").parquet(staging)
+    (cells, input.queryExecution.observedMetrics)
   }
 
   /** Full run with single-pass limiting, per-sink promotion, manifest commits
     * and resume. Returns the per-sink aggregate DataFrame (also persisted as
     * metrics).
     *
-    * Single-pass shape (DESIGN.md "data movement" list, round-2 revision):
-    * the routed rows are written ONCE to a staging table partitioned by
-    * (sink, bucket); limiter verdicts come from a column-pruned scan of the
-    * staged files; fallback/discard are partition-directory moves; committing
-    * a sink = one atomic directory rename + manifest entry. The round-1 shape
-    * (verdict pre-pass + full-table cache + per-sink filtered writes) touched
-    * the fact table 2+ times and pinned it in executor memory.
+    * Shape: [[stage]] writes the limited rows ONCE into `_staging`,
+    * partitioned by sink; committing a sink = one atomic directory rename +
+    * manifest entry. Per-sink rows/bytes and in/out/dropped come from the
+    * verdict cells; exact distinct convs from one conv_id-pruned read of the
+    * staged sinks about to be committed.
     *
     * Resume note: a resumed run re-stages ALL sinks — limiter verdicts must
     * see the full (sink, bucket) volumes, including buckets whose sink is
@@ -112,124 +132,87 @@ object Pipeline {
       cfg: Config = Config(),
       failAfterSinks: Int = Int.MaxValue // test hook: simulate a mid-job kill
   ): DataFrame = {
-    val turns = Transcripts.fromEvents(spark, sfDir)
-
-    // Per-STAGE observe() counters (reference /api/sources + /api/workers
-    // parity, web/api/sources.go:30-89, workers.go:27-84): each stage of the
-    // one staging pass reports its own rows — runtime-visible metrics with
-    // zero extra passes. Conservation invariants (asserted in ManifestSpec):
-    // scan_rows = parse_ok + parse_quarantined; route_in = scan_rows;
-    // fanout_rows ≥ route_in (fan-out duplicates); dead-letter routed rows =
-    // quarantined + unmatched.
-    val obsScan = new org.apache.spark.sql.Observation(s"graft_scan_$runId")
-    val obsParse = new org.apache.spark.sql.Observation(s"graft_parse_$runId")
-    val obsRoute = new org.apache.spark.sql.Observation(s"graft_route_$runId")
-    val scanned = turns.observe(obsScan, count(lit(1)).as("rows"))
-    val parsed = parsedSalted(scanned, cfg.saltBuckets)
-      .observe(obsParse,
-        sum(when(col("level").isNotNull, 1L).otherwise(0L)).as("rows_ok"),
-        sum(when(col("level").isNull, 1L).otherwise(0L)).as("rows_quarantined"))
-    val targeted = Router.withTargets(Enrichment.enrich(parsed, spark), cfg.routeRules)
-      .observe(obsRoute,
-        count(lit(1)).as("rows_in"),
-        sum(when(col("targets") === array(lit(Router.DeadLetter)), 1L)
-          .otherwise(0L)).as("rows_dead_letter"))
-    val fanned = Router.explodeTargets(targeted)
-
     val manifest = new Manifest(outRoot)
     val already = manifest.committedSinks()
-
-    // observe() = runtime-visible counters with zero extra passes — the
-    // reference's live Stats (monitoring/stats.go:10-118) as Spark metrics.
-    // Attached to the staging write, the job's one pass over the fact table.
-    val obs = new org.apache.spark.sql.Observation(s"graft_metrics_$runId")
-    val observed = fanned.observe(obs,
-      count(lit(1)).as("routed_rows"),
-      sum(octet_length(col("text"))).as("routed_bytes"),
-      approx_count_distinct(col("sink")).as("sinks")) // observe() forbids exact distinct aggs
-
     val staging = s"$outRoot/_staging"
-    // cells AND exact per-final-sink commit stats from the limiter's ONE
-    // pruned scan of the staged files — run() itself performs zero passes
-    // over staged data (the round-2 shape re-read the staged conv_id column
-    // of everything just written for the countDistinct)
-    val (_, cells, stats) =
-      SinglePassLimit.writeLimitedWithStats(observed, cfg.limitRules, staging)
+    val (cells, observed) = stage(Transcripts.fromEvents(spark, sfDir), spark, cfg, staging)
 
-    var written = 0
-    stats.keys.toSeq.sorted.filterNot(already.contains).foreach { sink =>
-      if (written < failAfterSinks) {
-        val (rows, bytes, convs) = stats(sink)
-        manifest.promoteAndCommit(sink,
-          java.nio.file.Paths.get(staging, s"sink=$sink"), runId, rows, bytes, convs)
-        written += 1
-      }
+    val finalSinks = cells.filter(_.curSink != null).groupBy(_.curSink).view
+      .mapValues(cs => (cs.map(_.rows).sum, cs.map(_.bytes).sum)).toMap
+    val toCommit = finalSinks.keys.toSeq.sorted.filterNot(already.contains).take(failAfterSinks)
+    // the schema pins `sink` to string (a type-inferred partition value would
+    // read an all-numeric sink name as int)
+    val convs = if (toCommit.isEmpty) Map.empty[String, Long] else
+      spark.read.schema("conv_id STRING, sink STRING").parquet(staging)
+        .filter(col("sink").isin(toCommit: _*))
+        .groupBy(col("sink")).agg(countDistinct(col("conv_id")))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    toCommit.foreach { sink =>
+      val (rows, bytes) = finalSinks(sink)
+      manifest.promoteAndCommit(sink, Paths.get(staging, s"sink=$sink"), runId,
+        rows, bytes, convs(sink))
     }
 
-    // Persist the observed run metrics next to the lineage entries (A1/A2) —
-    // the staging write always ran, so obs.get never blocks. The per-sink
-    // in/out/dropped counters come from the limiter's verdict cells, i.e.
-    // they were observed DURING the run with zero extra passes — the
+    // Persist the run metrics next to the lineage entries (A1/A2). The
+    // per-sink in/out/dropped counters come from the limiter's verdict cells,
+    // i.e. they were observed DURING the run with zero extra passes — the
     // reference's live per-connection Stats (monitoring/stats.go:10-118,
     // served at web/api/targets.go:43-121) as a run artifact.
-    val m = obs.get
-    val perSinkJson = {
-      final case class C(var inRows: Long = 0, var inBytes: Long = 0,
-          var outRows: Long = 0, var outBytes: Long = 0,
-          var droppedRows: Long = 0, var droppedBytes: Long = 0)
-      val bySink = scala.collection.mutable.SortedMap[String, C]()
-      cells.foreach { c =>
-        val in = bySink.getOrElseUpdate(c.origSink, C())
-        in.inRows += c.rows; in.inBytes += c.bytes
-        if (c.curSink == null) {
-          val d = bySink.getOrElseUpdate(c.lastSink, C())
-          d.droppedRows += c.rows; d.droppedBytes += c.bytes
-        } else {
-          val out = bySink.getOrElseUpdate(c.curSink, C())
-          out.outRows += c.rows; out.outBytes += c.bytes
-        }
+    val record = Manifest.Json.createObjectNode()
+    val routedRows = cells.map(_.rows).sum
+    record.put("run_id", runId)
+      .put("routed_rows", routedRows)
+      .put("routed_bytes", cells.map(_.bytes).sum)
+      .put("sinks", cells.map(_.origSink).distinct.length)
+    val stages = record.putObject("stages")
+    def counter(obs: String, name: String): Long = observed(obs).getAs[Long](name)
+    stages.putObject("scan").put("rows", counter("graft_scan", "rows"))
+    stages.putObject("parse")
+      .put("rows_ok", counter("graft_parse", "rows_ok"))
+      .put("rows_quarantined", counter("graft_parse", "rows_quarantined"))
+    stages.putObject("route")
+      .put("rows_in", counter("graft_route", "rows_in"))
+      .put("rows_dead_letter", counter("graft_route", "rows_dead_letter"))
+      .put("fanout_rows", routedRows)
+    final case class C(var inRows: Long = 0, var inBytes: Long = 0,
+        var outRows: Long = 0, var outBytes: Long = 0,
+        var droppedRows: Long = 0, var droppedBytes: Long = 0)
+    val bySink = scala.collection.mutable.SortedMap[String, C]()
+    cells.foreach { c =>
+      val in = bySink.getOrElseUpdate(c.origSink, C())
+      in.inRows += c.rows; in.inBytes += c.bytes
+      if (c.curSink == null) {
+        val d = bySink.getOrElseUpdate(c.lastSink, C())
+        d.droppedRows += c.rows; d.droppedBytes += c.bytes
+      } else {
+        val out = bySink.getOrElseUpdate(c.curSink, C())
+        out.outRows += c.rows; out.outBytes += c.bytes
       }
-      bySink.map { case (s, c) =>
-        s""""$s":{"in_rows":${c.inRows},"in_bytes":${c.inBytes},""" +
-          s""""out_rows":${c.outRows},"out_bytes":${c.outBytes},""" +
-          s""""dropped_rows":${c.droppedRows},"dropped_bytes":${c.droppedBytes}}"""
-      }.mkString("{", ",", "}")
     }
-    // per-stage counters (sources/workers parity) — all observed on the one
-    // staging pass; see the conservation invariants at the observe() sites
-    val mScan = obsScan.get
-    val mParse = obsParse.get
-    val mRoute = obsRoute.get
-    val stagesJson =
-      s"""{"scan":{"rows":${mScan("rows")}},""" +
-        s""""parse":{"rows_ok":${mParse("rows_ok")},""" +
-        s""""rows_quarantined":${mParse("rows_quarantined")}},""" +
-        s""""route":{"rows_in":${mRoute("rows_in")},""" +
-        s""""rows_dead_letter":${mRoute("rows_dead_letter")},""" +
-        s""""fanout_rows":${m("routed_rows")}}}"""
-    val metricsJson = s"""{"run_id":"$runId","routed_rows":${m("routed_rows")},""" +
-      s""""routed_bytes":${m("routed_bytes")},"sinks":${m("sinks")},""" +
-      s""""stages":$stagesJson,"per_sink":$perSinkJson}"""
+    val perSink = record.putObject("per_sink")
+    bySink.foreach { case (s, c) =>
+      perSink.putObject(s)
+        .put("in_rows", c.inRows).put("in_bytes", c.inBytes)
+        .put("out_rows", c.outRows).put("out_bytes", c.outBytes)
+        .put("dropped_rows", c.droppedRows).put("dropped_bytes", c.droppedBytes)
+    }
     // tmp + atomic move: the metrics HTTP sidecar may scrape this file at
     // any moment, and a crash mid-write must not leave a truncated record
-    val metricsTmp = java.nio.file.Paths.get(outRoot, "_tmp", s"_metrics_$runId.json")
-    java.nio.file.Files.createDirectories(metricsTmp.getParent)
-    java.nio.file.Files.writeString(metricsTmp, metricsJson)
-    java.nio.file.Files.move(metricsTmp,
-      java.nio.file.Paths.get(outRoot, "_manifest", s"_metrics_$runId.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val metricsTmp = Paths.get(outRoot, "_tmp", s"_metrics_$runId.json")
+    Files.createDirectories(metricsTmp.getParent)
+    Files.writeString(metricsTmp, Manifest.Json.writeValueAsString(record))
+    Files.move(metricsTmp, Paths.get(outRoot, "_manifest", s"_metrics_$runId.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
 
     // drop the staging residue once every staged sink is committed
-    if (stats.keySet.subsetOf(new Manifest(outRoot).committedSinks()))
-      graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(staging))
+    if (finalSinks.keySet.subsetOf(new Manifest(outRoot).committedSinks()))
+      graft.util.Fs.deleteRecursively(Paths.get(staging))
 
-    // Final per-sink aggregate FROM THE MANIFEST ENTRIES — writeAndCommit
-    // already computed rows/bytes/convs per sink on the cached routed set, so
-    // re-reading every committed sink's parquet here (the round-1 shape) would
-    // be a complete second read of all written data at the 100 TB design
-    // point. The manifest IS the aggregate. (_metrics_* sidecar files carry
-    // no sink field — the isNotNull filter excludes them.)
+    // Final per-sink aggregate FROM THE MANIFEST ENTRIES — re-reading every
+    // committed sink's parquet here (the round-1 shape) would be a complete
+    // second read of all written data at the 100 TB design point. The
+    // manifest IS the aggregate. (_metrics_* sidecar files carry no sink
+    // field — the isNotNull filter excludes them.)
     manifest.entries(spark)
       .filter(col("sink").isNotNull)
       .select(col("sink"), col("row_count").cast("long").as("turns"),

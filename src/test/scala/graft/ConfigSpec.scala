@@ -5,7 +5,6 @@ import graft.model.Transcripts
 import graft.parse.GrokParser
 import graft.route.Router
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.functions._
 
 /** YAML config → Catalyst compilation parity with the programmatic rules
   * (reference config round-trip tests, config/config_test.go:15-200). */
@@ -79,10 +78,19 @@ class ConfigSpec extends SparkSpec {
 
   test("YAML config drives the full pipeline") {
     val cfg = PipelineConfig.fromYaml(yaml)
-    val turns = Transcripts.synthetic(spark, 20, 6)
-    val (routed, dropped) = Pipeline.route(turns, spark, cfg)
-    assert(routed.count() > 0)
-    assert(dropped.count() >= 0)
-    assert(routed.filter(col("sink") === "nonexistent").count() === 0)
+    val out = java.nio.file.Files.createTempDirectory("graft-yaml").toString
+    val perSink = Pipeline.run(spark, "/root/testdata/sf0.001", out, "yaml", cfg)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // only the YAML's sinks (plus its fallback and the dead-letter sink) commit
+    assert(perSink.nonEmpty && perSink.values.forall(_ > 0))
+    assert(perSink.keySet.subsetOf(
+      Set("sink_a", "sink_b", "sink_err", "sink_search", "sink_fallback", Router.DeadLetter)),
+      perSink.keySet)
+    // the YAML routes, not the programmatic defaults, decided the fan-out
+    val parsed = GrokParser.parse(Transcripts.fromEvents(spark, "/root/testdata/sf0.001"))
+    val routedBySink = Router.fanOut(parsed, cfg.routeRules)
+      .groupBy("sink").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perSink.values.sum <= routedBySink.values.sum)
+    assert(perSink("sink_a") === routedBySink("sink_a"))
   }
 }

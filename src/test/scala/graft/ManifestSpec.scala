@@ -54,6 +54,26 @@ class ManifestSpec extends SparkSpec {
     assert(resumed.distinct.length === resumed.length)
   }
 
+  test("a run id with quotes and backslashes still writes well-formed JSON records") {
+    val out = Files.createTempDirectory("graft-json").toString
+    val runId = """q"uote\d"""
+    Pipeline.run(spark, sfDir, out, runId)
+    import scala.jdk.CollectionConverters._
+    val records = Seq("_manifest", "_snapshots").flatMap(d =>
+      graft.util.Fs.listDir(java.nio.file.Paths.get(out, d)))
+      .filter(_.getFileName.toString.endsWith(".json"))
+    val sinks = new Manifest(out).committedSinks()
+    // one pointer per sink, one snapshot per sink, and the run metrics
+    assert(records.size === 2 * sinks.size + 1)
+    records.foreach { p =>
+      val n = Manifest.Json.readTree(Files.readString(p)) // throws if malformed
+      assert(n.get("run_id").asText === runId, p)
+    }
+    val metrics = Manifest.Json.readTree(Files.readString(
+      java.nio.file.Paths.get(out, "_manifest", s"_metrics_$runId.json")))
+    assert(metrics.get("per_sink").fieldNames().asScala.toSet === sinks)
+  }
+
   test("manifest entries are queryable as a DataFrame (metrics-as-SQL)") {
     val out = Files.createTempDirectory("graft-entries").toString
     Pipeline.run(spark, sfDir, out, runId = "rq")
@@ -443,7 +463,9 @@ class ManifestSpec extends SparkSpec {
     Pipeline.run(spark, sfDir, out, runId = "r3", failAfterSinks = 2)
     val m = new Manifest(out)
     val turns = graft.model.Transcripts.fromEvents(spark, sfDir)
-    val (routedAll, _) = Pipeline.route(turns, spark)
+    val (routedAll, _) = graft.limit.RateLimit.apply(
+      graft.route.Router.fanOut(graft.enrich.Enrichment.enrich(Pipeline.parsedSalted(turns), spark)),
+      graft.limit.RateLimit.defaultRules())
     val remaining = m.antiJoinResume(spark,
       routedAll.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink"))
     val committedCount = m.committedSinks().toSeq

@@ -3,7 +3,10 @@ package graft
 import graft.model.Transcripts
 import graft.pipeline.Pipeline
 import graft.enrich.Enrichment
+import graft.limit.{RateLimit, SinglePassLimit}
 import graft.parse.GrokParser
+import graft.route.Router
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression tests — the properties that make this engine scale
@@ -14,13 +17,19 @@ class PlanShapeSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** The two-pass limiter over the salted routing: the plan behind the
+    * driver's q_limit_* queries. */
+  private def twoPassRouted(): DataFrame =
+    RateLimit.apply(Router.fanOut(Enrichment.enrich(
+      Pipeline.parsedSalted(Transcripts.fromEvents(spark, sfDir)), spark)),
+      RateLimit.defaultRules())._1
+
   test("all grok evaluations live in one Project (subexpression-elimination domain)") {
     // Catalyst inlines the parse aliases into many expression copies, but as
     // long as every copy sits in a SINGLE Project operator, runtime
     // subexpression elimination evaluates the regex once per row. Copies
     // spread across Filters/Generates would each re-execute it.
-    val (routed, _) = Pipeline.route(Transcripts.fromEvents(spark, sfDir), spark)
-    val out = routed.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
+    val out = twoPassRouted().select("conv_id", "turn_idx", "role", "text", "tool", "ts", "sink")
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
     val ops = out.queryExecution.optimizedPlan.collect {
@@ -92,10 +101,12 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("single-pass staged plan: grok only in Projects (CSE domain), ONE exchange") {
-    // the single-pass path drops the post-parse barrier exchange, so this
-    // asserts the two facts that make that safe+fast: every grok copy stays
-    // inside a Project (whole-stage codegen subexpression elimination ⇒ one
-    // regex exec per row), and the whole job has exactly one shuffle
+    // the plan Pipeline.run stages (its limiter input, observe() counters
+    // included, under the limiter's exchange) has no post-parse barrier
+    // exchange, so this asserts the two facts that make that safe+fast:
+    // every grok copy stays inside a Project (whole-stage codegen
+    // subexpression elimination ⇒ one regex exec per row), and the whole job
+    // has exactly one shuffle
     // synthetic turns round-tripped through parquet: the events-derived
     // fixture adds a row_number window (its own exchange) that exists only to
     // DERIVE the sandbox table — production transcripts arrive with turn_idx
@@ -105,9 +116,8 @@ class PlanShapeSpec extends SparkSpec {
     Transcripts.synthetic(spark, nConvs = 20, turnsPerConv = 10)
       .write.mode("overwrite").parquet(turnsDir)
     val turns = spark.read.parquet(turnsDir)
-    val fanned = graft.route.Router.fanOut(Enrichment.enrich(
-      Pipeline.parsedProjected(turns), spark))
-    val staged = graft.limit.SinglePassLimit.staged(fanned, saltBuckets = 32)
+    val cfg = Pipeline.Config()
+    val staged = SinglePassLimit.staged(Pipeline.limiterInput(turns, spark, cfg), cfg.saltBuckets)
     def hasGrok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.exists(_.isInstanceOf[graft.parse.GrokExtract])
     val ops = staged.queryExecution.optimizedPlan.collect {
@@ -180,8 +190,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("limit-chain plan reuses the salted exchange instead of rescanning") {
-    val (routed, _) = Pipeline.route(Transcripts.fromEvents(spark, sfDir), spark)
-    val physical = routed.queryExecution.optimizedPlan.toString
+    val physical = twoPassRouted().queryExecution.optimizedPlan.toString
     val scans = "parquet".r.findAllIn(physical).length
     assert(scans <= 1, s"the returned routed plan must scan the fact table once " +
       s"(verdicts are precomputed driver-side), found $scans:\n" + physical.take(3000))
